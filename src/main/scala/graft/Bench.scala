@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark driver: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query medians.
@@ -28,18 +27,7 @@ object Bench {
     // (Verify/oracle runs never set this — they stay on md5)
     sys.env.get("SPARK_GRAFT_HASH_MODE").foreach(m =>
       spark.conf.set(graft.functions.GraftFunctions.HashModeKey, m))
-    // JVM warm-up: a tiny query touching higher-order functions and a
-    // shuffle, so the first timed query doesn't absorb the one-time
-    // Janino/lambda codegen cost (~5-15 s, measured) that every
-    // executor JVM pays exactly once.
-    locally {
-      import org.apache.spark.sql.functions._
-      spark.range(1000)
-        .select(aggregate(transform(sequence(lit(0), lit(3)), i => i * 2),
-          lit(0L), (a, b) => a + b).as("v"))
-        .groupBy(col("v")).count()
-        .write.format("noop").mode("overwrite").save()
-    }
+    LocalSession.warmUp(spark)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -56,24 +44,9 @@ object Bench {
     // Different neighbors per round turn contamination into an
     // outlier the median drops; fixed seeds keep runs reproducible.
     val names = queries.keys.toSeq.sorted
-    // isolate runs: drop cached data/broadcasts accumulated by the
-    // previous query so its GC debt isn't billed to this one.
-    // clearCache + System.gc alone is NOT enough: gc() only
-    // ENQUEUES reference processing, and the ContextCleaner's
-    // broadcast/shuffle removal RPCs then land DURING the next
-    // timed query (suite-mode ran multi-job queries ~2x their
-    // isolated time; probe sketch_distinct_kmv 3.0 suite vs 0.8
-    // isolated). So: gc, run an UNTIMED settle action that spins
-    // the scheduler while the cleaner queue drains, gc the newly
-    // unreachable state, and park briefly for concurrent-GC tails.
+    // isolate runs (LocalSession.settle) before every timed run
     def settleThenTime(name: String): (String, Double) = {
-      spark.catalog.clearCache()
-      System.gc()
-      spark.range(1024).repartition(4)
-        .groupBy(org.apache.spark.sql.functions.expr("id % 8")).count()
-        .write.format("noop").mode("overwrite").save()
-      System.gc()
-      Thread.sleep(400)
+      LocalSession.settle(spark)
       val t0 = System.nanoTime()
       // noop sink forces full evaluation of every output column;
       // count() would let Catalyst prune the projections being timed.
@@ -164,15 +137,6 @@ object Bench {
       "text_token_stats", "judge_metrics", "events_sessionize",
       "cost_report", "stats_winsorized", "group_quantiles_exact",
       "dedup_minhash_lsh", "graph_pagerank_parts")
-    def jesc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val basketWanted = sys.env.get("SPARK_GRAFT_BENCH_ORACLE") match {
       case Some("0") => false
       case Some("1") => true // force in a subset run (dev testing)
@@ -185,7 +149,8 @@ object Bench {
         val dir = java.nio.file.Files.createTempDirectory("bench_oracle_")
         val sqlFile = dir.resolve("basket.json")
         java.nio.file.Files.writeString(sqlFile, sqls.map { case (n, q) =>
-          s""""${jesc(n)}":"${jesc(q)}"""" }.mkString("{", ",", "}"))
+          s"${LocalSession.jsonString(n)}:${LocalSession.jsonString(q)}"
+        }.mkString("{", ",", "}"))
         val py = dir.resolve("basket.py")
         java.nio.file.Files.writeString(py,
           """import duckdb, glob, json, os, sys, time

@@ -956,11 +956,8 @@ object DedupQueries {
           explode(graft.ops.Text.winnowHashes(col("text"), WinnowK, WinnowW))
             .as("__h"))
         val cnts = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("__n"))
-        // twoPass: count-prune the hot fingerprint buckets BEFORE any
-        // id set materializes — the fps lineage is one cheap scan
-        // projection, exactly the regime the strategy was measured for
         val pairs = Similarity.cappedIdSets(
-            fps, Seq("__h"), "doc_id", WinnowMaxDf, "__ids", twoPass = true)
+            fps, Seq("__h"), "doc_id", WinnowMaxDf, "__ids")
           .select(explode(Similarity.orderedPairs(col("__ids"))).as("__p"))
           .groupBy(col("__p.id_a").as("id_a"), col("__p.id_b").as("id_b"))
           .agg(count(lit(1)).as("n_shared"))

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One local-session builder for every dev entry point (Verify, Bench,
-  * StressBench, Explain) so the tuning knobs cannot drift between the
-  * tools whose numbers SCALING.md compares:
+/** The shared module for every dev entry point: the local-session
+  * builder, the JVM warm-up, the between-runs settle and the JSON
+  * string quoter. Bench and Verify (driver-invoked, in the library)
+  * and the test-tree tools StressBench, ProfileQuery and
+  * PlanInventory all build their session here, so the tuning knobs
+  * cannot drift between the tools whose numbers SCALING.md compares:
   *  - SPARK_GRAFT_CPUS threads (callers pass their default);
   *  - shuffle partitions sized to the thread count;
   *  - small-SF scan splitting (default openCost keeps a sub-MB
@@ -36,4 +39,56 @@ object LocalSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
+
+  /** JVM warm-up: a tiny query touching higher-order functions and a
+    * shuffle, so the first timed query doesn't absorb the one-time
+    * Janino/lambda codegen cost (~5-15 s, measured) that every
+    * executor JVM pays exactly once.
+    */
+  def warmUp(spark: SparkSession): Unit = {
+    import org.apache.spark.sql.functions._
+    spark.range(1000)
+      .select(aggregate(transform(sequence(lit(0), lit(3)), i => i * 2),
+        lit(0L), (a, b) => a + b).as("v"))
+      .groupBy(col("v")).count()
+      .write.format("noop").mode("overwrite").save()
+  }
+
+  /** Isolate the next timed run: drop cached data/broadcasts
+    * accumulated by the previous query so its GC debt isn't billed to
+    * the next one. clearCache + System.gc alone is NOT enough: gc()
+    * only ENQUEUES reference processing, and the ContextCleaner's
+    * broadcast/shuffle removal RPCs then land DURING the next timed
+    * query (suite-mode ran multi-job queries ~2x their isolated time;
+    * probe sketch_distinct_kmv 3.0 suite vs 0.8 isolated). So: gc,
+    * run an UNTIMED settle action that spins the scheduler while the
+    * cleaner queue drains, gc the newly unreachable state, and park
+    * briefly for concurrent-GC tails.
+    */
+  def settle(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    System.gc()
+    spark.range(1024).repartition(4)
+      .groupBy(org.apache.spark.sql.functions.expr("id % 8")).count()
+      .write.format("noop").mode("overwrite").save()
+    System.gc()
+    Thread.sleep(400)
+  }
+
+  /** `s` as a JSON string literal, quotes included: backslash, quote
+    * and ALL control chars (< 0x20) are escaped; everything else,
+    * non-ASCII and surrogate pairs included, passes through as UTF-16.
+    * Verify writes oracle_sql.json with it — a tab or CR in an oracle
+    * SQL string left raw would make the driver's json.load fail and
+    * zero the whole correctness gate.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

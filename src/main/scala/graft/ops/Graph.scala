@@ -20,6 +20,12 @@ object Graph {
     */
   private[graft] val BroadcastMaxNodes = 4000000L
 
+  /** Edge-count floor for [[pageRank]]/[[personalizedPageRank]]'s
+    * broadcast regime (r14; the gate in pageRankImpl says why).
+    * [[pageRankConverged]] deliberately has no such floor.
+    */
+  private[graft] val BroadcastMinEdges = 8000000L
+
   /** PageRank in FIXED-POINT integer arithmetic — every rank is a
     * BIGINT in `unit`-ths (default 10⁻¹² units), every step is
     * integer multiply / truncating `div`, so the result is
@@ -164,7 +170,7 @@ object Graph {
     // already computable from the persisted edge frame for one cheap
     // cached-scan job: below ~8M edges (≈128 MB/round exchanged) the
     // lazy shuffle chain is measurably the faster plan.
-    val bcastNodes = nNodes <= BroadcastMaxNodes && e.count() >= 8000000L
+    val bcastNodes = nNodes <= BroadcastMaxNodes && e.count() >= BroadcastMinEdges
     var r = root(nodesFlagged
       .select(col("node"), (col("__seed") * lit(unit)).as("r")))
     for (_ <- 1 to iters) {
@@ -263,11 +269,12 @@ object Graph {
     // broadcast regime below the node threshold (r13) — same
     // rationale and threshold as pageRankImpl: the RDD-rooted rank
     // frame defeats size estimation, so the planner otherwise SMJ'd
-    // and re-exchanged + sorted the EDGE frame every round. r14: the
-    // same edge-count gate as pageRankImpl — each broadcast build is
-    // its own job, so on a small edge frame the per-chunk lazy SMJ
-    // chain beats ~2 build-job floors per round; above ~8M edges the
-    // per-round edge exchange dominates any fixed cost.
+    // and re-exchanged + sorted the EDGE frame every round. Unlike
+    // pageRankImpl this gate is deliberately node-only, with NO
+    // BroadcastMinEdges floor: the chunked loop materializes every
+    // `checkEvery` rounds anyway, so broadcast builds stay cheap — the
+    // r14 same-session A/B measured broadcast 9.92 s vs edge-gated
+    // lazy 10.94 s (OPTIMIZATION_r14.md:102).
     val bcastNodes = nNodes <= BroadcastMaxNodes
     val damped = s"(s div ${dampingDen}L) * ${dampingNum}L" +
       s" + ((s % ${dampingDen}L) * ${dampingNum}L) div ${dampingDen}L"
@@ -366,30 +373,20 @@ object Graph {
     * freed before returning.
     */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
-                    broadcastMaxEdges: Long = 16000000L,
-                    normRepartition: Boolean = false): DataFrame = {
+                    broadcastMaxEdges: Long = 16000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // persisted: deg's two-scan union AND the orientation join all
     // read the normalized edge frame — unpersisted lineage re-ran the
     // caller's whole edge construction once per consumer (r8: the
     // edge build, not the counting, dominated the wall)
-    val rawUnd = edges.select(
+    val und = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("__u"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("__v"))
       .where(col("__u") =!= col("__v"))
-    // normalization-dedup strategy is SHAPE-DEPENDENT (both sides
-    // measured, GraphProbe ×300 + sf0.1 A/B — see SCALING.md
-    // round-11 "near-unique keys, second site"): when pair keys
-    // repeat (sf0.1 co-purchase stream, ~5× duplication) the default
-    // map-side partial aggregate shrinks the exchange and wins
-    // (4.9 vs 6.3 s); when keys are near-unique at spill scale the
-    // partial table is pure spill and raw repartition-then-distinct
-    // wins 3.6× (×300: 280 vs 77 s). Callers feeding a massive
-    // low-duplication pair stream set normRepartition = true.
-    val und = (if (normRepartition)
-        rawUnd.repartition(col("__u"), col("__v")).distinct()
-      else rawUnd.distinct())
+      // map-side partial distinct: pair streams repeat keys (sf0.1
+      // co-purchase ~5×), so the partial aggregate shrinks the exchange
+      .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = und.select(col("__u").as("__n"))
       .union(und.select(col("__v")))

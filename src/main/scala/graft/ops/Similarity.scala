@@ -175,50 +175,26 @@ object Similarity {
     * `collect_set → filter(size BETWEEN 2 AND cap)` — over-cap buckets
     * are dropped either way — but an adversarial hot bucket (a
     * boilerplate shingle shared by 100M docs, an empty-text length
-    * band) never materializes its id set in one aggregation buffer.
-    * Two interchangeable strategies, chosen per call site by what was
-    * measured (SCALING.md "hot-bucket prefilter"):
+    * band) never materializes its id set in one aggregation buffer:
+    * ONE pass through `df` with the size-capped native aggregate
+    * [[graft.functions.GraftFunctions.collectSetCapped]] — worst-case
+    * O(cap) state per bucket (a hot bucket collapses to an overflow
+    * flag), one shuffle, no lineage re-evaluation. The count →
+    * semi-join → collect_set two-pass form it replaced lost every
+    * measured A/B, on the winnow query and on the ×16 duplication
+    * stress alike (SCALING.md "Hot-bucket prefilter"); SimilaritySpec
+    * keeps it as the reference this operator is checked against.
     *
-    *  - `twoPass = false` (default): ONE pass through `df` with the
-    *    size-capped native aggregate [[graft.functions.GraftFunctions
-    *    .collectSetCapped]] — worst-case O(cap) state per bucket (a
-    *    hot bucket collapses to an overflow flag), one shuffle, no
-    *    lineage re-evaluation. The right choice when `df`'s lineage
-    *    is expensive (e.g. 64-permutation MinHash signatures).
-    *  - `twoPass = true`: (1) count rows per bucket — O(1) state,
-    *    (2) left-semi join to buckets with count in [2, cap],
-    *    (3) collect_set only on survivors. Costs a second evaluation
-    *    of `df`'s lineage + an extra shuffle, but prunes hot buckets'
-    *    rows BEFORE the set shuffle — measured faster when hot
-    *    buckets carry a large share of the rows and the lineage is
-    *    cheap (the shingle inverted indexes on a duplication-stressed
-    *    corpus).
-    *
-    * REQUIRES (keyCols..., idCol) rows to be distinct — every call
-    * site here satisfies this by construction (one row per doc per
-    * band / distinct shingle hashes per doc / distinct chunk hashes
-    * per doc), so count(*) equals the would-be set size exactly, and
-    * idCol to be LongType (the native aggregate's contract).
+    * REQUIRES idCol to be LongType (the native aggregate's contract).
     * Output: keyCols ++ ascending-sorted distinct idCol array AS
     * outCol, only for buckets with 2..cap ids.
     */
   private[graft] def cappedIdSets(df: DataFrame, keyCols: Seq[String],
                                   idCol: String, cap: Int,
-                                  outCol: String,
-                                  twoPass: Boolean = false): DataFrame =
-    if (twoPass) {
-      val ok = df.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__cnt"))
-        .where(col("__cnt").between(2, cap))
-        .select(keyCols.map(col): _*)
-      df.join(ok, keyCols, "left_semi")
-        .groupBy(keyCols.map(col): _*)
-        .agg(sort_array(collect_set(col(idCol))).as(outCol))
-    } else {
-      df.groupBy(keyCols.map(col): _*)
-        .agg(collectSetCapped(col(idCol), cap).as(outCol))
-        .where(col(outCol).isNotNull && size(col(outCol)) >= 2)
-    }
+                                  outCol: String): DataFrame =
+    df.groupBy(keyCols.map(col): _*)
+      .agg(collectSetCapped(col(idCol), cap).as(outCol))
+      .where(col(outCol).isNotNull && size(col(outCol)) >= 2)
 
   /** Ids dropped by first-(lowest-id)-wins LSH dedup: every doc whose
     * id exceeds the minimum id of any band bucket it occupies.

@@ -27,9 +27,14 @@ object Tuning {
     * right for a single-JVM session — and for any cluster whose jobs
     * are cheap to re-run — but a production deployment at scale sets
     * this to true (plus a checkpoint dir) and pays one durable write
-    * per staged frame for a recovery story. All staged frames are
-    * result-sized or distinct-value-sized, so the write is bounded by
-    * the query's own output, not the corpus.
+    * per staged frame for a recovery story. Most staged frames are
+    * result-sized or distinct-value-sized, so their write is bounded
+    * by the query's own output. Some are corpus-sized and pay a
+    * corpus-bounded durable write in reliable mode, among them the
+    * augmented curve corpus `dedup_survival_curve` stages
+    * (`DedupQueries.curveAugmented`) and the per-vector centroid
+    * assignments (`assignCells` output) that `Similarity.semDedup`
+    * and `Similarity.semDedupCentroidRank` stage.
     */
   private val ReliableCheckpointKey = "spark.graft.reliableCheckpoint"
 

@@ -102,7 +102,7 @@ object LlmCache {
   private val maps = Array.fill(Stripes)(
     new java.util.LinkedHashMap[String, String](64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, String]): Boolean =
-        size() > Capacity / Stripes
+        this.size() > Capacity / Stripes
     })
 
   private def stripe(key: String) =

@@ -107,7 +107,7 @@ final case class OpenAiChatClient(
       }
     attemptResult match {
       case Right(r) => r
-      case Left(err) if tried < transportRetries =>
+      case Left(_) if tried < transportRetries =>
         Thread.sleep(200L * (tried + 1))
         sendWithRetry(request, tried + 1)
       case Left(err) =>

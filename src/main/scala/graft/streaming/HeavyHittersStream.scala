@@ -3,7 +3,6 @@ package graft.streaming
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming Misra–Gries heavy hitters — the stateful form of the

@@ -9,7 +9,6 @@ import graft.ops.Relational
   * lever at 100 TB. Asserted on the executed plan, not assumed.
   */
 class BucketingSpec extends SparkSpec {
-  import spark.implicits._
 
   test("same-key bucketed tables join with no exchange and no sort") {
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

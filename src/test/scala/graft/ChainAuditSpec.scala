@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** dedup_chain_audit on CONSTRUCTED corpora: the gated corpus's
   * clusters are all clean (sf0.01/sf0.1: every cluster chained=0), so
   * this spec is what exercises the detection paths.

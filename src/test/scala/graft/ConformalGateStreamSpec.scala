@@ -61,7 +61,7 @@ class ConformalGateStreamSpec extends SparkSpec {
     // the audit is exact GIVEN the (batch-boundary-dependent)
     // thresholds: replay the same batch split with the same
     // per-batch thresholds and the counters must match exactly
-    var buf = new graft.expressions.KllBuf()
+    val buf = new graft.expressions.KllBuf()
     var expTest = 0L
     var expPass = 0L
     Seq(b1, b2, b3).foreach { b =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Epoch reshuffle plan: every epoch is a complete pass, shards are
   * hash-balanced, epoch-over-epoch placement is ≈independent
   * (stay_frac near 1/S), and epoch 0 has no predecessor.

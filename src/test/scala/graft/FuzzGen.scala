@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - malformed / empty / null-literal JSON in events.props
   *   - duplicate, zero-norm, one-hot, constant and tiny embeddings
   *
-  * Usage: `runMain graft.FuzzGen <seed> <outDir>` then
+  * Usage: `Test/runMain graft.FuzzGen <seed> <outDir>` then
   * `runMain graft.Verify <outDir> <verifyOut>` and
   * `python3 tools/check.py <outDir> <verifyOut>` — the standard gate
   * machinery, pointed at hostile data. FUZZ.md records seeds run and

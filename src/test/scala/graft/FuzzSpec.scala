@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import LocalSession.jsonString
+
 /** Adversarial-data differential tripwire (VERDICT r11 #1, FUZZ.md):
   * regenerate the seed-1 hostile corpus and replay a curated subset
   * of the most fuzz-sensitive gates against their DuckDB oracles —
@@ -24,16 +26,6 @@ class FuzzSpec extends SparkSpec {
     "text_quality", "text_char_shingles", "text_winnow_fingerprints",
     "ann_bruteforce_topk", "semdedup_centroid_rank")
 
-  private def jesc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   test("curated gate subset is oracle-exact on the seed-1 hostile corpus") {
     val py = try {
       new ProcessBuilder("python3", "-c", "import duckdb, pandas")
@@ -50,7 +42,7 @@ class FuzzSpec extends SparkSpec {
           .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       val json = subset
-        .map(n => s""""${jesc(n)}": "${jesc(SparkEntry.oracleSql(n))}"""")
+        .map(n => s"${jsonString(n)}: ${jsonString(SparkEntry.oracleSql(n))}")
         .mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
       val pb = new ProcessBuilder("python3", "tools/check.py",

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** sketch_kmv_setops invariants: exactness when the merged sketch is
   * complete (union < k ⇒ the sketch IS the set), and the error
   * envelope of the estimators on the real per-source pairs.

@@ -56,7 +56,7 @@ class PipelineSpec extends SparkSpec {
     LlmCache.clear()
     val msgs = Seq(ChatMessage("user", "same question"))
     val a = MockJudgeClient("a").run(msgs)
-    val b = MockJudgeClient("b").run(msgs)
+    MockJudgeClient("b").run(msgs)
     val a2 = MockJudgeClient("a").run(msgs)
     assert(a == a2)
     assert(LlmCache.size == 2, "two clients, same prompt → two entries")

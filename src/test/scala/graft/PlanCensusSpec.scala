@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stops at N−1 queries cannot trip. This gate fails the build when
   * the committed census is stale: every registered query must have a
   * row, and no row may record a failed plan. Regenerate with
-  * `sbt "runMain graft.PlanInventory"` after plan-affecting changes.
+  * `sbt "Test/runMain graft.PlanInventory"` after plan-affecting changes.
   */
 class PlanCensusSpec extends AnyFunSuite {
 

@@ -9,7 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * decide whether a slow query is codegen, shuffle, stragglers or
   * compute BEFORE touching it.
   *
-  * Usage: sbt "runMain graft.ProfileQuery <query> [query...]"
+  * Usage: sbt "Test/runMain graft.ProfileQuery <query> [query...]"
   *   SPARK_GRAFT_SF_DIR   data dir (default sf0.1)
   *   SPARK_GRAFT_PROF_RUNS  timed runs per query (default 2)
   */
@@ -20,14 +20,7 @@ object ProfileQuery {
     val spark = LocalSession.build("32")
     spark.sparkContext.setLogLevel("WARN")
     // same warm-up as Bench so run 1 is comparable
-    locally {
-      import org.apache.spark.sql.functions._
-      spark.range(1000)
-        .select(aggregate(transform(sequence(lit(0), lit(3)), i => i * 2),
-          lit(0L), (a, b) => a + b).as("v"))
-        .groupBy(col("v")).count()
-        .write.format("noop").mode("overwrite").save()
-    }
+    LocalSession.warmUp(spark)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val sb = new scala.collection.mutable.ArrayBuffer[String]()
     val listener = new SparkListener {
@@ -56,9 +49,7 @@ object ProfileQuery {
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to runs).foreach { r =>
-        spark.catalog.clearCache()
-        System.gc()
-        Thread.sleep(300)
+        LocalSession.settle(spark) // Bench's settle: numbers stay comparable
         sb.synchronized(sb.clear())
         if (r == runs) spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()

@@ -168,7 +168,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: tokenBudgetSelect equals the naive global-cumsum prefix for random corpora") {
-    import org.apache.spark.sql.functions.col
     val gen = for {
       n <- Gen.choose(1, 120)
       budget <- Gen.choose(1L, 3000L)
@@ -200,7 +199,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("pinned: tokenBudgetSelect excludes NULL-score rows (documented contract)") {
-    import org.apache.spark.sql.functions.col
     // un-scored documents have no rank and must NOT leak into the
     // cut, even with budget to spare — the scaladoc's documented
     // contract (coalesce the score to opt them in explicitly)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.pipeline._
 
 /** ProcessSandbox: real python3 subprocess execution on the driver —

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
 import graft.streaming.SemDedupStream
@@ -23,7 +22,7 @@ class SemDedupStreamSpec extends SparkSpec {
     (0 until 4).map(c => c -> vec(c * 17))
 
   private def runStream(batches: Seq[Seq[VecIn]], minCos: Double,
-                        maxState: Int = 4096, name: String = "semst")
+                        maxState: Int = 4096, name: String)
       : Seq[VecVerdict] = {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[VecIn]

@@ -317,7 +317,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfTopK: external codebook (parquet and csv) matches the inline centroid frame") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val e = Tables.load(spark, sfDir, "embeddings")
     val inline = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
@@ -465,8 +465,14 @@ class SimilaritySpec extends SparkSpec {
       .select(col("doc_id"), (col("n_chars") % 37).as("k"))
     val onePass = Similarity.cappedIdSets(d, Seq("k"), "doc_id", 50, "ids")
       .orderBy("k").collect()
-    val twoPass = Similarity.cappedIdSets(d, Seq("k"), "doc_id", 50, "ids",
-        twoPass = true)
+    // the reference: count rows per bucket, semi-join to buckets with
+    // 2..cap rows, collect_set only the survivors
+    val ok = d.groupBy(col("k")).agg(count(lit(1)).as("__cnt"))
+      .where(col("__cnt").between(2, 50))
+      .select(col("k"))
+    val twoPass = d.join(ok, Seq("k"), "left_semi")
+      .groupBy(col("k"))
+      .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
       .orderBy("k").collect()
     assert(onePass.sameElements(twoPass))
     assert(onePass.nonEmpty)

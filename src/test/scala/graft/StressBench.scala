@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Relational, Similarity}
 
@@ -8,6 +8,11 @@ import graft.ops.{Relational, Similarity}
   * Unions the corpus N times with shifted ids so EVERY doc sits in an
   * N-way identical-duplicate cluster — every LSH bucket is hot, the
   * regime that used to be quadratic. Not part of the library surface.
+  *
+  * Usage: sbt "Test/runMain graft.StressBench"
+  *   SPARK_GRAFT_SF_DIR        data dir (default sf0.1)
+  *   SPARK_GRAFT_STRESS_COPIES corpus copies (default 16)
+  *   SPARK_GRAFT_STRESS_ONLY   comma-separated row names to run
   */
 object StressBench {
   def main(args: Array[String]): Unit = {
@@ -57,14 +62,13 @@ object StressBench {
     // every fingerprint's df multiplies by N, so base-df-1 fps become
     // true N-doc dup buckets (N²/2 pairs each, the work the operator
     // EXISTS to find) while base-df ≥ ⌈cap/N⌉+1 fps cross the MOSS
-    // noise cap and are count-pruned before any set materializes.
+    // noise cap and collapse to the capped aggregate's overflow flag.
     // The row to read: wall grows with emitted pairs, never with the
     // uncapped bucket area.
     timed("winnowPairGen") {
       val fps = stressed.select(col("doc_id"),
         explode(graft.ops.Text.winnowHashes(col("text"), 4, 8)).as("__h"))
-      Similarity.cappedIdSets(fps, Seq("__h"), "doc_id", 50, "__ids",
-          twoPass = true)
+      Similarity.cappedIdSets(fps, Seq("__h"), "doc_id", 50, "__ids")
         .select(explode(Similarity.orderedPairs(col("__ids"))).as("__p"))
         .groupBy(col("__p.id_a"), col("__p.id_b"))
         .agg(count(lit(1))).count()
@@ -72,14 +76,11 @@ object StressBench {
 
     // adversarial hot bucket: ONE bucket holds 1M ids (an empty-text
     // length band / boilerplate shingle at corpus scale) next to 100k
-    // normal 2-id buckets. BOTH cappedIdSets strategies are timed on
-    // the same input: the default one-pass CollectSetCapped aggregate
-    // (hot bucket collapses to an overflow flag, O(cap) state) and
-    // the twoPass=true count→semi-join→collect_set prefilter (the hot
-    // bucket is dropped from the count pass alone — no 1M-element set
-    // ever materializes in an aggregation buffer). Output is
-    // identical either way: 100k pairs from the normal buckets, none
-    // from the hot one.
+    // normal 2-id buckets. The one-pass CollectSetCapped aggregate
+    // collapses the hot bucket to an overflow flag (O(cap) state), so
+    // no 1M-element set ever materializes in an aggregation buffer.
+    // Output: 100k pairs from the normal buckets, none from the hot
+    // one.
     def hotBucketInput = {
       val hot = spark.range(1000L * 1000)
         .select(lit(0L).as("__band"), col("id").as("doc_id"))
@@ -91,12 +92,6 @@ object StressBench {
     timed("hotBucketPairGen") {
       Similarity.cappedIdSets(hotBucketInput, Seq("__band"), "doc_id",
           cap = 1000, "__ids")
-        .select(explode(Similarity.orderedPairs(col("__ids"))).as("__p"))
-        .count()
-    }
-    timed("hotBucketPairGenTwoPass") {
-      Similarity.cappedIdSets(hotBucketInput, Seq("__band"), "doc_id",
-          cap = 1000, "__ids", twoPass = true)
         .select(explode(Similarity.orderedPairs(col("__ids"))).as("__p"))
         .count()
     }

@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 /** orders_survival_km: hand-worked Kaplan–Meier values on a
   * constructed order log, plus the estimator's monotonicity
   * invariants on the real corpus.

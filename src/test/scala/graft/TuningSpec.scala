@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ops.Tuning
 import graft.ops.Tuning.StagedFrame
 
